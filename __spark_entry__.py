@@ -3470,15 +3470,15 @@ def kg_triples_interleaved(spark, sf_dir):
     single-node (tools/oracle/make_entry_golden.py), so this row measures
     distributed-vs-reference triple parity in the driver's hard signal."""
     from recrun_spark.stage1 import extract_documents
-    from recrun_spark.stage2 import detect_mentions, link_mentions, load_aliases
+    from recrun_spark.stage2 import explode_mentions, link_mentions, load_aliases
     from recrun_spark.stage3 import canonicalize
     from recrun_spark.stage4 import assemble_triples
     _ensure_pkg(spark)
     docs = _entry_corpus(spark)
     aliases = load_aliases(spark)
     surfaces = [r["alias"] for r in aliases.select("alias").distinct().collect()]
-    ex = extract_documents(docs)
-    linked = link_mentions(detect_mentions(ex, surfaces), aliases)
+    ex = extract_documents(docs, surfaces=surfaces)
+    linked = link_mentions(explode_mentions(ex), aliases)
     return assemble_triples(ex, linked, canonicalize(aliases))
 
 

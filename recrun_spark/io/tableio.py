@@ -35,8 +35,11 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 
 def write_table(df: DataFrame, path: str, partition_by=None,
-                stage: str = "", lineage_key: str = "doc_id") -> dict:
-    """Write df; return the manifest dict (also persisted at path/_MANIFEST.json)."""
+                stage: str = "", lineage_key: str = "doc_id",
+                meta: dict | None = None) -> dict:
+    """Write df; return the manifest dict (also persisted at
+    path/_MANIFEST.json).  ``meta`` adds caller fields to the manifest
+    (the pipeline records the inputs a stage was built from)."""
     spark = df.sparkSession
     partition_by = list(partition_by or [])
     t0 = time.time()
@@ -81,6 +84,7 @@ def write_table(df: DataFrame, path: str, partition_by=None,
         "rows": int(sum(p["rows"] for p in lineage)),
         "partitions": lineage,
         "wall_sec": round(time.time() - t0, 3),
+        **(meta or {}),
         "complete": True,
     }
     os.makedirs(path, exist_ok=True)

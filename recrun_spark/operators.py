@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def salted_join(big: DataFrame, small: DataFrame, big_key: str,
@@ -584,6 +585,18 @@ def release_caches(df: DataFrame) -> None:
             cached.unpersist()
 
 
+def arrow_frame(spark, columns: dict, schema: StructType) -> DataFrame:
+    """A driver-built frame from Python column lists, handed to Spark as one
+    ``pyarrow.Table``: it plans as a JVM-side ``LocalTableScan`` that
+    starts no Python task, where ``createDataFrame(<list>)`` plans a scan
+    over a PythonRDD whose every use starts Python tasks again."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    return spark.createDataFrame(
+        pa.Table.from_pydict(columns, schema=to_arrow_schema(schema)),
+        schema=schema)
+
+
 def _cc_driver_local(e: DataFrame, rows=None) -> DataFrame:
     """Min-label union-find over a collected edge list — the fast path for
     metadata-scale graphs (entity dictionaries), where shipping the edges
@@ -592,8 +605,6 @@ def _cc_driver_local(e: DataFrame, rows=None) -> DataFrame:
     golden canonical map uses.  ``rows`` lets the caller hand over an
     already-collected edge list (the size-gate probe) so the fast path
     costs ONE job, not a count plus a collect."""
-    from pyspark.sql.types import StructField, StructType
-
     from .linking import min_label_components
     comp = min_label_components(
         [], ((r["u"], r["v"]) for r in (e.collect() if rows is None
@@ -601,7 +612,10 @@ def _cc_driver_local(e: DataFrame, rows=None) -> DataFrame:
     node_type = e.schema["u"].dataType
     schema = StructType([StructField("node", node_type),
                          StructField("component", node_type)])
-    return e.sparkSession.createDataFrame(sorted(comp.items()), schema)
+    nodes = sorted(comp)
+    return arrow_frame(e.sparkSession,
+                       {"node": nodes,
+                        "component": [comp[n] for n in nodes]}, schema)
 
 
 def _symmetrize(e: DataFrame) -> DataFrame:

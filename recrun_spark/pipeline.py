@@ -2,14 +2,24 @@
 
 ``run_pipeline(spark, input_path, out_dir)`` executes:
 
-  stage1_extract   documents → extractions            (zero-shuffle map)
-  stage2_mentions  extractions → mentions → linked    (broadcast dict join)
-  stage3_canonical aliases → canonical map            (large/small-star CC)
-  stage4_triples   → deduped triples, partitioned by pred
+  stage1_extract   documents → extractions + mentions  (one fused Python
+                                                        pass; a narrow input
+                                                        is doc_id-hash spread
+                                                        first)
+  stage2_mentions  mentions → linked                   (JVM explode +
+                                                        broadcast dict join)
+  stage3_canonical aliases → canonical map             (driver union-find or
+                                                        large/small-star CC)
+  stage4_triples   → triples, partitioned by pred      (JVM rules, duplicate-
+                                                        free by construction)
 
 Each stage writes ``<out_dir>/<stage>/`` via TableIO with a ``_MANIFEST.json``
-completion marker; a re-run skips any stage whose manifest is complete
-(kill-and-resume reproduces identical triples — tests/test_stages_kg.py).
+completion marker that records the digest of the alias dictionary it was
+built from: stage 1 of its surfaces, stages 2-4 of its (alias, entity_id,
+prior) rows.  A re-run skips a stage whose manifest is complete and carries
+the current digest; once one stage is rebuilt, every later stage is rebuilt
+too, since it consumes that stage's output (kill-and-resume reproduces
+identical triples — tests/test_stages_kg.py).
 
 CLI:  python -m recrun_spark.pipeline --input spans.parquet --out /tmp/kg
 """
@@ -26,7 +36,11 @@ from pyspark.sql import DataFrame, SparkSession
 from .io.tableio import read_manifest, read_table, write_table
 from .readability import Settings
 from .stage1 import extract_documents
-from .stage2 import detect_mentions, link_mentions, load_aliases
+# detect_mentions is not called here (stage 1 detects the mentions); it
+# stays a name of this module because perfbench/tracing.py wraps it here
+from .stage2 import (_dictionary_digest, _surface_digest,  # noqa: F401
+                     detect_mentions, explode_mentions, link_mentions,
+                     load_aliases)
 from .stage3 import canonicalize
 from .stage4 import assemble_triples
 
@@ -35,16 +49,18 @@ STAGES = ("stage1_extract", "stage2_mentions", "stage3_canonical",
 
 
 def _stage(spark: SparkSession, out_dir: str, name: str, build,
-           partition_by=None, lineage_key: str = "doc_id",
-           force: bool = False) -> DataFrame:
+           inputs: dict, partition_by=None, lineage_key: str = "doc_id",
+           force: bool = False) -> tuple[DataFrame, bool]:
+    """(the stage's stored table, whether it was built now): a complete
+    manifest that records every item of ``inputs`` (the digests of what
+    the stage was built from) is reused unless ``force``."""
     path = os.path.join(out_dir, name)
     m = None if force else read_manifest(path)
-    if m is not None:
-        return read_table(spark, path)
-    df = build()
-    write_table(df, path, partition_by=partition_by, stage=name,
-                lineage_key=lineage_key)
-    return read_table(spark, path)
+    if m is not None and all(m.get(k) == v for k, v in inputs.items()):
+        return read_table(spark, path), False
+    write_table(build(), path, partition_by=partition_by, stage=name,
+                lineage_key=lineage_key, meta=inputs)
+    return read_table(spark, path), True
 
 
 def run_pipeline(spark: SparkSession, input_path: str, out_dir: str,
@@ -55,25 +71,37 @@ def run_pipeline(spark: SparkSession, input_path: str, out_dir: str,
     os.makedirs(out_dir, exist_ok=True)
     t0 = time.time()
     aliases = aliases_df if aliases_df is not None else load_aliases(spark)
-    surfaces = [r["alias"] for r in aliases.select("alias").distinct().collect()]
+    dictionary = (aliases.select("alias", "entity_id", "prior").toArrow()
+                  .to_pydict())
+    surfaces = sorted(set(dictionary["alias"]))
+    # stage 1 depends on the surfaces only; stages 2-4 on the whole
+    # dictionary (entity ids and priors pick the links and the same-as
+    # graph)
+    surface_inputs = {
+        "surface_digest": _surface_digest(tuple(surfaces)).hex()}
+    dictionary_inputs = {"dictionary_digest": _dictionary_digest(zip(
+        dictionary["alias"], dictionary["entity_id"],
+        dictionary["prior"])).hex()}
 
     documents = spark.read.parquet(input_path)
 
-    extractions = _stage(
+    # a stage built now forces every later stage: each consumes its output
+    extractions, force = _stage(
         spark, out_dir, "stage1_extract",
         lambda: extract_documents(documents, settings,
-                                  include_renders=include_renders),
-        force=force)
+                                  include_renders=include_renders,
+                                  surfaces=surfaces),
+        surface_inputs, force=force)
 
-    linked = _stage(
+    linked, force = _stage(
         spark, out_dir, "stage2_mentions",
-        lambda: link_mentions(detect_mentions(extractions, surfaces), aliases),
-        force=force)
+        lambda: link_mentions(explode_mentions(extractions), aliases),
+        dictionary_inputs, force=force)
 
-    canonical = _stage(
+    canonical, force = _stage(
         spark, out_dir, "stage3_canonical",
         lambda: canonicalize(aliases),
-        lineage_key="entity_id", force=force)
+        dictionary_inputs, lineage_key="entity_id", force=force)
 
     built4 = {}
 
@@ -82,8 +110,8 @@ def run_pipeline(spark: SparkSession, input_path: str, out_dir: str,
         built4["df"] = df
         return df
 
-    triples = _stage(
-        spark, out_dir, "stage4_triples", _build4,
+    triples, _ = _stage(
+        spark, out_dir, "stage4_triples", _build4, dictionary_inputs,
         partition_by=["pred"], force=force)
     if built4.get("df") is not None:
         from .operators import release_caches
@@ -116,15 +144,7 @@ def main():
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args()
     from .session import get_spark
-    # Python-fold cost per input byte is ~100x a columnar scan's, so size
-    # splits for CPU balance, not IO: small maxPartitionBytes keeps every
-    # core busy in stage 1 (at real cluster scale, tune to ~docs-per-task
-    # x fold-cost; the default 128m would starve a 32-core node on a
-    # sub-GB corpus)
-    spark = get_spark("recrun_pipeline", cpus=args.cpus, extra_conf={
-        "spark.sql.files.maxPartitionBytes": "8m",
-        "spark.sql.files.openCostInBytes": "2m",
-    })
+    spark = get_spark("recrun_pipeline", cpus=args.cpus)
     summary = run_pipeline(spark, args.input, args.out, force=args.force,
                            include_renders=not args.no_renders)
     print(json.dumps({k: v for k, v in summary.items() if k != "stages"}))

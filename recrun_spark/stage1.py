@@ -3,33 +3,60 @@
 Runs the per-document readability fold (``recrun_spark.readability``) as an
 Arrow-vectorized ``mapInArrow`` over the interleaved documents table
 (``doc_id, spans array<struct<kind,text,media_ref,offset>>`` —
-BASELINE.json input_hint).
+BASELINE.json input_hint).  Given the alias surfaces, the same pass also
+detects each document's mentions (stage 2's rule, ``stage2.span_mentions``)
+over the spans it just retained, so on the KG path a document crosses into
+Python once.
 
 Scale design (SURVEY.md §3/§4):
 
-* **Zero shuffle.** Each document's fold is self-contained, so stage 1 is a
-  pure map: no ``groupBy``/``posexplode``-then-regroup.  On a 1000-executor
-  cluster this scales linearly with input splits; parallelism is governed by
-  ``spark.sql.files.maxPartitionBytes`` on the scan, not by shuffle
-  partitions.
+* **A pure map, spread over the cores first when the input is narrow.**
+  Each document's fold is self-contained — no ``groupBy``/``posexplode``-
+  then-regroup — so on an input with a split per core stage 1 is one map,
+  and parallelism comes from the scan's splits.  But the fold costs ~100x
+  a columnar scan per input byte, and a row group is the smallest unit a
+  parquet scan splits by, so no split setting spreads a one-row-group
+  file.  An input with fewer partitions than ``defaultParallelism`` and at
+  least ``SPREAD_MIN_DOCS`` documents is therefore hash-partitioned on
+  ``doc_id`` into ``FOLD_TASKS_PER_CORE`` x ``defaultParallelism`` tasks
+  first (``spread_by_doc``).  Measured on 4 cores with a 4,000-doc
+  generator corpus (one row group): without the exchange the fold ran in
+  one scan task of two, at CPU utilisation 0.34 and 3.7 s; spread into 8
+  tasks it runs at 0.86 and 1.9 s, exchange included.  Below ~1,000 docs
+  the exchange, and every extra worker's alias automaton build, cost more
+  than they save (500 docs: 0.6 s in one task, 1.0 s spread).  Hashing on
+  ``doc_id`` keeps the partitioning a function of the data, so a retried
+  task sees the same documents without the local sort that a round-robin
+  ``repartition`` adds for retry determinism.
 * **Arrow batching, no per-row Python.**  ``mapInArrow`` moves docs
   executor→Python in Arrow record batches; the only Python work is the fold
   itself (the reference's algorithm is inherently per-document, exactly like
   the reference's own single-pass SAX handler, R:733-765).
+* **Per-document error isolation.**  A document the fold cannot process
+  yields an empty extraction (and no mentions), not a failed task.
 * **Column pruning.** The UDF declares only (doc_id, spans); Catalyst's
   nested-schema pruning keeps the parquet scan minimal.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+import logging
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, IntegerType, StringType, StructField,
                                StructType)
 
 from .readability import Settings, extract
+from .stage2 import MENTION_TYPE, broadcast_matcher, span_mentions
+
+# fold tasks per core: enough that a straggler task is a small share of
+# the stage, few enough that per-task overhead stays negligible
+FOLD_TASKS_PER_CORE = 2
+# below this many documents the fold of a narrow input runs in one task:
+# the exchange costs ~0.5 s and a worker's alias automaton build, the
+# fold ~1 ms per document (crossover measured at ~1,000 docs on 4 cores)
+SPREAD_MIN_DOCS = 1000
 
 SPAN_TYPE = StructType([
     StructField("kind", StringType()),
@@ -53,6 +80,14 @@ EXTRACTION_SCHEMA = StructType([
     StructField("text", StringType()),   # Article.getText  (R:789-793)
     StructField("html", StringType()),   # Article.getHTML  (R:799-803)
 ])
+
+# extract_documents(..., surfaces=...): the extraction plus its mentions
+FUSED_SCHEMA = StructType(EXTRACTION_SCHEMA.fields + [
+    StructField("mentions", ArrayType(MENTION_TYPE))])
+
+_EMPTY_EXTRACTION = {"title": "", "next_page": "", "text_length": 0,
+                     "score": 0, "retained_spans": [], "text": "",
+                     "html": ""}
 
 
 def _unpack_spans_batch(batch, spans_col: str = "spans"):
@@ -85,46 +120,62 @@ def _pc():
 
 
 def _extract_arrow_batches(batches, settings: Settings,
-                           include_renders: bool = True):
+                           include_renders: bool = True, pattern=None):
+    """Fold each document of each batch; with an alias ``pattern``, also
+    emit the mentions found in its retained spans."""
     import pyarrow as pa
-    out_schema = pa.schema([
+    span_t = pa.struct([
+        ("kind", pa.string()), ("text", pa.string()),
+        ("media_ref", pa.string()), ("offset", pa.int32())])
+    fields = [
         ("doc_id", pa.string()),
         ("title", pa.string()),
         ("next_page", pa.string()),
         ("text_length", pa.int32()),
         ("score", pa.int32()),
-        ("retained_spans", pa.list_(pa.struct([
-            ("kind", pa.string()), ("text", pa.string()),
-            ("media_ref", pa.string()), ("offset", pa.int32())]))),
+        ("retained_spans", pa.list_(span_t)),
         ("text", pa.string()),
         ("html", pa.string()),
-    ])
+    ]
+    mention_t = pa.struct([
+        ("surface", pa.string()), ("span_offset", pa.int32()),
+        ("start", pa.int32())])
+    if pattern is not None:
+        fields.append(("mentions", pa.list_(mention_t)))
+    out_schema = pa.schema(fields)
     for batch in batches:
         doc_ids, kinds, texts, refs, offs, bounds = _unpack_spans_batch(batch)
         titles, nexts, tlens, scores = [], [], [], []
         art_texts, art_htmls = [], []
-        # retained spans are assembled as FLAT columns + list offsets and
-        # turned into a ListArray(StructArray) directly — the former
-        # dict-per-span list comprehension (then pa.array() re-parsing every
-        # dict) was ~30% of the whole stage wall on top of the fold
+        # retained spans (and mentions) are assembled as FLAT columns + list
+        # offsets and turned into a ListArray(StructArray) directly — the
+        # former dict-per-span list comprehension (then pa.array()
+        # re-parsing every dict) was ~30% of the whole stage wall on top of
+        # the fold
         r_kinds: list = []
         r_texts: list = []
         r_refs: list = []
         r_offs: list = []
         r_bounds = [0]
+        m_surfs: list = []
+        m_offs: list = []
+        m_starts: list = []
+        m_bounds = [0]
         for i in range(len(doc_ids)):
             s, e = bounds[i], bounds[i + 1]
             try:
                 rec = extract(zip(kinds[s:e], texts[s:e], refs[s:e],
                                   offs[s:e]),
                               settings, renders=include_renders)
-            except ValueError:
-                # malformed span stream (unknown kind): per-document error
-                # isolation — one bad doc must not fail a 10^12-doc job;
-                # emit an empty extraction (score 0, nothing retained)
-                rec = {"title": "", "next_page": "", "text_length": 0,
-                       "score": 0, "retained_spans": [], "text": "",
-                       "html": ""}
+            except Exception:
+                # malformed span stream (an unknown kind, a stray close
+                # before any open, ...): per-document error isolation — one
+                # bad doc must not fail a 10^12-doc job; emit an empty
+                # extraction (score 0, nothing retained, no mentions)
+                logging.getLogger(__name__).warning(
+                    "document %r: fold failed, emitting an empty "
+                    "extraction", doc_ids[i], exc_info=True)
+                rec = _EMPTY_EXTRACTION
             titles.append(rec["title"])
             nexts.append(rec["next_page"])
             tlens.append(rec["text_length"])
@@ -134,27 +185,57 @@ def _extract_arrow_batches(batches, settings: Settings,
                 r_texts.append(t)
                 r_refs.append(m)
                 r_offs.append(int(o))
+                if pattern is not None:
+                    for surface, start in span_mentions(k, t, pattern):
+                        m_surfs.append(surface)
+                        m_offs.append(int(o))
+                        m_starts.append(start)
             r_bounds.append(len(r_kinds))
+            m_bounds.append(len(m_surfs))
             art_texts.append(rec["text"])
             art_htmls.append(rec["html"])
-        span_struct = pa.StructArray.from_arrays(
-            [pa.array(r_kinds, pa.string()),
-             pa.array(r_texts, pa.string()),
-             pa.array(r_refs, pa.string()),
-             pa.array(r_offs, pa.int32())],
-            names=["kind", "text", "media_ref", "offset"])
-        retained_arr = pa.ListArray.from_arrays(
-            pa.array(r_bounds, pa.int32()), span_struct)
-        yield pa.RecordBatch.from_arrays([
+        columns = [
             pa.array(doc_ids, pa.string()),
             pa.array(titles, pa.string()),
             pa.array(nexts, pa.string()),
             pa.array(tlens, pa.int32()),
             pa.array(scores, pa.int32()),
-            retained_arr,
+            _list_of_structs(r_bounds, span_t,
+                             [r_kinds, r_texts, r_refs, r_offs]),
             pa.array(art_texts, pa.string()),
             pa.array(art_htmls, pa.string()),
-        ], schema=out_schema)
+        ]
+        if pattern is not None:
+            columns.append(_list_of_structs(m_bounds, mention_t,
+                                            [m_surfs, m_offs, m_starts]))
+        yield pa.RecordBatch.from_arrays(columns, schema=out_schema)
+
+
+def _list_of_structs(bounds, struct_t, flat_columns):
+    """ListArray(StructArray) from flat per-field lists plus list offsets."""
+    import pyarrow as pa
+    return pa.ListArray.from_arrays(
+        pa.array(bounds, pa.int32()),
+        pa.StructArray.from_arrays(
+            [pa.array(col, struct_t.field(i).type)
+             for i, col in enumerate(flat_columns)],
+            fields=list(struct_t)))
+
+
+def spread_by_doc(df: DataFrame) -> DataFrame:
+    """The input of a per-document Python pass, spread over the cores: a
+    batch ``df`` with fewer partitions than ``defaultParallelism`` (one row
+    group, a ``limit()``, a one-partition cache) and at least
+    ``SPREAD_MIN_DOCS`` rows is hash-partitioned on ``doc_id`` into
+    ``FOLD_TASKS_PER_CORE`` x ``defaultParallelism`` partitions.  Any other
+    input is returned as it is, so the pass stays a pure map."""
+    if df.isStreaming:
+        return df
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions() >= cores
+            or df.limit(SPREAD_MIN_DOCS).count() < SPREAD_MIN_DOCS):
+        return df
+    return df.repartition(FOLD_TASKS_PER_CORE * cores, "doc_id")
 
 
 def explode_retained(extractions: DataFrame) -> DataFrame:
@@ -173,16 +254,23 @@ def explode_retained(extractions: DataFrame) -> DataFrame:
 
 def extract_documents(documents: DataFrame,
                       settings: Optional[Settings] = None,
-                      include_renders: bool = True) -> DataFrame:
-    """documents(doc_id, spans) -> extractions (EXTRACTION_SCHEMA).
+                      include_renders: bool = True,
+                      surfaces=None) -> DataFrame:
+    """documents(doc_id, spans) -> extractions (EXTRACTION_SCHEMA), or
+    FUSED_SCHEMA — the extraction plus its ``mentions`` — when the alias
+    ``surfaces`` are given.
 
     Uses ``mapInArrow`` (not ``mapInPandas``): the spans column is consumed
     straight from the Arrow buffers, skipping the pandas dict-per-struct
     conversion that would otherwise dominate the stage."""
     settings = settings or Settings.shipped()
+    matcher = (None if surfaces is None
+               else broadcast_matcher(documents.sparkSession, surfaces))
 
     def fn(batches):
-        return _extract_arrow_batches(batches, settings, include_renders)
+        pattern = None if matcher is None else matcher()
+        return _extract_arrow_batches(batches, settings, include_renders,
+                                      pattern)
 
-    return documents.select("doc_id", "spans").mapInArrow(
-        fn, schema=EXTRACTION_SCHEMA)
+    return spread_by_doc(documents.select("doc_id", "spans")).mapInArrow(
+        fn, schema=EXTRACTION_SCHEMA if matcher is None else FUSED_SCHEMA)

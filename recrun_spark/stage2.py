@@ -1,15 +1,21 @@
-"""Stage 2 — batched mention detection + entity-link scoring.
+"""Stage 2 — mention detection + entity-link scoring.
 
-Inputs: stage-1 extractions (doc_id, retained_spans) + the alias dictionary
-(alias, entity_id, prior).
+Inputs: stage-1 extractions (doc_id, retained_spans, mentions) + the alias
+dictionary (alias, entity_id, prior).
 
 Scale design:
 
-* **Mention detection stays a pure map** over extractions (Arrow
-  ``mapInPandas``): the compiled longest-match alias automaton is built once
-  per executor from a Spark *broadcast* of the alias surfaces (not shipped
-  per-batch, not a join against exploded token n-grams — at 10^12 docs an
-  n-gram explode would shuffle orders of magnitude more rows than it keeps).
+* **Detection runs inside the stage-1 pass.**  ``extract_documents(...,
+  surfaces=...)`` applies the alias automaton to each document's retained
+  spans while they are still in the fold's Python worker and emits them as
+  a ``mentions`` array column; ``explode_mentions`` turns that column into
+  mention rows JVM-side, so the pipeline's retained spans cross into
+  Python once.  ``detect_mentions`` is the same rule (``span_mentions``) as
+  a ``mapInArrow`` of its own, for callers that start from stored
+  extractions.  Either way the automaton is built once per worker from a
+  Spark *broadcast* of the alias surfaces (``broadcast_matcher``) — not a
+  join against exploded token n-grams, which at 10^12 docs would shuffle
+  orders of magnitude more rows than it keeps.
 * **Entity-link scoring is a broadcast hash join** against the alias
   dictionary (``F.broadcast``), then a ``max_by``-style argmax per mention
   (max prior, ties → min entity_id) — all JVM-side.
@@ -24,16 +30,14 @@ from __future__ import annotations
 import hashlib
 import os
 from collections import OrderedDict
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, IntegerType, StringType,
                                StructField, StructType)
 
 from .linking import TrieMatcher, build_alias_pattern, find_mentions
-from .operators import salted_join
+from .operators import arrow_frame, salted_join
 
 # worker-local matcher cache: Python workers are reused across tasks
 # (spark.python.worker.reuse), so a large-dictionary TrieMatcher is built
@@ -70,6 +74,16 @@ def _surface_digest(surfaces_tuple: tuple) -> bytes:
     return h.digest()
 
 
+def _dictionary_digest(rows) -> bytes:
+    """Injective, order-independent digest of an alias dictionary's
+    (alias, entity_id, prior) rows: the fields of the sorted rows go
+    through ``_surface_digest`` as their ``repr`` (a None, a string and a
+    float stay distinct, and a float's repr round-trips)."""
+    return _surface_digest(tuple(
+        field for row in sorted(tuple(map(repr, r)) for r in rows)
+        for field in row))
+
+
 def _cached_pattern(surfaces_tuple: tuple):
     key = _surface_digest(surfaces_tuple)
     hit = _PATTERN_CACHE.pop(key, None)
@@ -87,12 +101,34 @@ def _cached_pattern(surfaces_tuple: tuple):
     return hit[0]
 
 
-MENTION_SCHEMA = StructType([
-    StructField("doc_id", StringType()),
+def broadcast_matcher(spark: SparkSession, surfaces):
+    """A worker-side callable that returns the alias automaton for
+    ``surfaces``: the sorted surface set travels once as a Spark broadcast,
+    and the automaton is built once per Python worker (``_cached_pattern``)."""
+    bc = spark.sparkContext.broadcast(sorted(set(surfaces)))
+    return lambda: _cached_pattern(tuple(bc.value))
+
+
+def span_mentions(kind: str, text: str, pattern):
+    """[(surface, start)] alias hits in one retained span: text spans only,
+    an empty text has none (the mention rule of linking.triples_for_doc).
+    The one detection rule of both the fused stage-1 pass and
+    ``detect_mentions``."""
+    if kind != "text" or not text:
+        return ()
+    return find_mentions(text, pattern)
+
+
+# one mention of a document; extract_documents(..., surfaces=...) emits
+# array<MENTION_TYPE> per document, detect_mentions one row per mention
+MENTION_TYPE = StructType([
     StructField("surface", StringType()),
     StructField("span_offset", IntegerType()),
     StructField("start", IntegerType()),
 ])
+
+MENTION_SCHEMA = StructType([StructField("doc_id", StringType())]
+                            + MENTION_TYPE.fields)
 
 ALIAS_SCHEMA = StructType([
     StructField("alias", StringType()),
@@ -101,32 +137,37 @@ ALIAS_SCHEMA = StructType([
 ])
 
 
+def explode_mentions(extractions: DataFrame) -> DataFrame:
+    """extractions(doc_id, mentions) -> mentions(MENTION_SCHEMA): the
+    mentions the stage-1 pass detected, as rows — JVM-side, no Python."""
+    return (extractions
+            .select("doc_id", F.explode("mentions").alias("m"))
+            .select("doc_id", "m.*"))
+
+
 def detect_mentions(extractions: DataFrame, surfaces: list) -> DataFrame:
     """extractions(doc_id, retained_spans) -> mentions(MENTION_SCHEMA).
 
-    Arrow-native map (``mapInArrow``): spans are read from the Arrow
-    buffers; the alias automaton is compiled once per task from the Spark
-    broadcast."""
-    spark = extractions.sparkSession
-    bc = spark.sparkContext.broadcast(sorted(set(surfaces)))
+    Arrow-native map (``mapInArrow``) over stored extractions: spans are
+    read from the Arrow buffers, and the alias automaton comes from
+    ``broadcast_matcher``."""
+    from .stage1 import _unpack_spans_batch, spread_by_doc
+    matcher = broadcast_matcher(extractions.sparkSession, surfaces)
 
     def fn(batches):
         import pyarrow as pa
-
-        from .stage1 import _unpack_spans_batch
         out_schema = pa.schema([
             ("doc_id", pa.string()), ("surface", pa.string()),
             ("span_offset", pa.int32()), ("start", pa.int32())])
-        pattern = _cached_pattern(tuple(bc.value))  # built once per worker
+        pattern = matcher()
         for batch in batches:
             doc_ids, kinds, texts, _refs, offs, bounds = \
                 _unpack_spans_batch(batch, "retained_spans")
             o_doc, o_surf, o_off, o_start = [], [], [], []
             for i in range(len(doc_ids)):
                 for j in range(bounds[i], bounds[i + 1]):
-                    if kinds[j] != "text" or not texts[j]:
-                        continue
-                    for surface, start in find_mentions(texts[j], pattern):
+                    for surface, start in span_mentions(kinds[j], texts[j],
+                                                        pattern):
                         o_doc.append(doc_ids[i])
                         o_surf.append(surface)
                         o_off.append(int(offs[j]))
@@ -136,7 +177,7 @@ def detect_mentions(extractions: DataFrame, surfaces: list) -> DataFrame:
                  pa.array(o_off, pa.int32()), pa.array(o_start, pa.int32())],
                 schema=out_schema)
 
-    # ship only the spans the automaton consumes: the Python loop skips
+    # ship only the spans the automaton consumes: span_mentions skips
     # every non-text/empty span anyway, so filtering the array JVM-side
     # is semantics-identical and cuts the Arrow transport (img/link/
     # header spans never cross the boundary); span_offset rides in the
@@ -146,21 +187,7 @@ def detect_mentions(extractions: DataFrame, surfaces: list) -> DataFrame:
         F.filter("retained_spans",
                  lambda s: (s["kind"] == "text") & (s["text"] != ""))
         .alias("retained_spans"))
-    # parallelism floor for the Python fold: a narrow upstream (a limit()
-    # collapses to one partition, a single unsplittable input file, a
-    # 1-partition cache) would run the per-doc automaton nearly serially
-    # on an idle cluster.  Only rebalance when the input has FEWER
-    # partitions than the default parallelism — at production scale scans
-    # carry many splits and this is a no-op, so the operator stays a pure
-    # map there (guide §2.5: fix input skew right after the read).
-    try:
-        n_parts = src.rdd.getNumPartitions()
-        target = spark.sparkContext.defaultParallelism
-        if n_parts < target:
-            src = src.repartition(target)
-    except Exception:
-        pass
-    return src.mapInArrow(fn, schema=MENTION_SCHEMA)
+    return spread_by_doc(src).mapInArrow(fn, schema=MENTION_SCHEMA)
 
 
 def link_mentions(mentions: DataFrame, aliases: DataFrame,
@@ -205,5 +232,7 @@ def _estimate_small(df: DataFrame, max_rows: int) -> bool:
 def load_aliases(spark: SparkSession, rows=None, seed: int = 42) -> DataFrame:
     from .fixtures.aliases import make_aliases
     rows = rows if rows is not None else make_aliases(seed)
-    return spark.createDataFrame(
-        [(a, e, float(p)) for a, e, p in rows], schema=ALIAS_SCHEMA)
+    return arrow_frame(spark, {"alias": [a for a, _e, _p in rows],
+                               "entity_id": [e for _a, e, _p in rows],
+                               "prior": [float(p) for _a, _e, p in rows]},
+                       ALIAS_SCHEMA)

@@ -1,4 +1,4 @@
-"""Stage 4 — triple assembly, dedup, and partitioned materialization.
+"""Stage 4 — triple assembly and partitioned materialization.
 
 Implements the fixed triple rules of ``recrun_spark.linking`` as whole-
 DataFrame operations (no Python in the hot path):
@@ -10,11 +10,12 @@ DataFrame operations (no Python in the hot path):
 
 Scale notes:
 * the canonical map is broadcast (|entities| rows);
-* the co-mention self-join keys on ``doc_id`` — bounded fan-out per doc
-  (distinct canonical entities per doc is small), so no skew salting needed;
-  AQE skew-join covers pathological docs;
-* dedup is ``dropDuplicates`` on the natural key — a single shuffle that the
-  partitioned write then reuses;
+* the per-doc distinct entities are persisted once and feed three rules;
+* co-mentions come from one ``doc_id``-keyed aggregate into a sorted
+  entity array per doc, whose i<j pairs are expanded row-locally — no
+  entities×entities self-join;
+* there is no triple-wide dedup: every rule's output is duplicate-free by
+  construction and the four preds are disjoint;
 * the sink partitions by ``pred`` (TableIO: Iceberg when configured,
   partitioned parquet + manifest otherwise) with per-partition lineage.
 """

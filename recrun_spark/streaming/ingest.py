@@ -39,8 +39,11 @@ def stream_documents(spark: SparkSession, input_dir: str,
 
 def extract_stream(stream_df: DataFrame,
                    settings: Optional[Settings] = None) -> DataFrame:
-    """Stage-1 extraction on a streaming DataFrame — the same zero-shuffle
-    Arrow map as the batch path."""
+    """Stage-1 extraction on a streaming DataFrame — the batch path's
+    Arrow map, without its spread: ``stage1.spread_by_doc`` cannot count a
+    streaming input, so each micro-batch is folded in the scan's own
+    splits, with no exchange, and the sink writes one file per non-empty
+    split."""
     return extract_documents(stream_df, settings)
 
 

@@ -2,7 +2,9 @@
 north_rule stage 4 resume semantics, streaming form).
 
 ``run_kg_available_now`` drains newly-arrived document files through the
-SAME stage-1..4 operators as the batch pipeline inside ``foreachBatch``:
+SAME stage-1..4 operators as the batch pipeline inside ``foreachBatch``
+(one fused stage-1 pass per micro-batch, its extractions persisted until
+the batch's triples are written):
 
 * every triple rule is doc-scoped (mentioned_in / co_mentioned_with /
   illustrated_by / next_page_of all carry the doc_id they came from), and
@@ -40,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..readability import Settings
 from ..operators import release_caches
 from ..stage1 import DOCUMENTS_SCHEMA, extract_documents
-from ..stage2 import detect_mentions, link_mentions, load_aliases
+from ..stage2 import explode_mentions, link_mentions, load_aliases
 from ..stage3 import canonicalize
 from ..stage4 import assemble_triples
 
@@ -58,12 +60,19 @@ def run_kg_available_now(spark: SparkSession, input_dir: str, out_dir: str,
     triples_root = os.path.join(out_dir, "triples")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        ex = extract_documents(batch_df, settings)
-        linked = link_mentions(detect_mentions(ex, surfaces), aliases)
+        # the extractions (with their fused mentions) feed the linked
+        # mentions and the illustrated_by / next_page_of branches: persist
+        # them so the batch is folded once, not once per branch
+        ex = extract_documents(batch_df, settings,
+                               surfaces=surfaces).persist()
+        linked = link_mentions(explode_mentions(ex), aliases)
         trips = assemble_triples(ex, linked, canonical)
-        (trips.write.mode("overwrite")
-         .parquet(os.path.join(triples_root, f"batch={batch_id}")))
-        release_caches(trips)
+        try:
+            (trips.write.mode("overwrite")
+             .parquet(os.path.join(triples_root, f"batch={batch_id}")))
+        finally:
+            release_caches(trips)
+            ex.unpersist()
 
     stream = (spark.readStream.schema(DOCUMENTS_SCHEMA)
               .option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -68,6 +68,45 @@ def test_canonicalize_matches_golden(spark):
     assert got == golden
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_arrow_built_frames_keep_schema_and_start_no_python(spark):
+    """load_aliases and the driver-local CC result keep the schema
+    (nullability included) and rows of the former list-built frames, and
+    plan a local scan instead of an ExistingRDD scan of a PythonRDD."""
+    from pyspark.sql.types import (LongType, StringType, StructField,
+                                   StructType)
+
+    from recrun_spark.fixtures.aliases import make_aliases
+    from recrun_spark.operators import _cc_driver_local
+    from recrun_spark.stage2 import ALIAS_SCHEMA, load_aliases
+    rows = make_aliases(42)
+    aliases = load_aliases(spark, rows)
+    listed = spark.createDataFrame([(a, e, float(p)) for a, e, p in rows],
+                                   schema=ALIAS_SCHEMA)
+    assert "ExistingRDD" in _executed_plan(listed)
+    assert aliases.schema == listed.schema == ALIAS_SCHEMA
+    assert sorted(aliases.collect()) == sorted(listed.collect())
+    assert "ExistingRDD" not in _executed_plan(aliases)
+
+    for node_type, ids in ((StringType(), "abcdef"),
+                           (LongType(), [10, 11, 12, 13, 14, 15])):
+        a, b, c, d, e, f = ids
+        edges = spark.createDataFrame(
+            [(b, a), (c, b), (e, d)],
+            StructType([StructField("u", node_type),
+                        StructField("v", node_type)]))
+        comp = _cc_driver_local(edges)
+        assert comp.schema == StructType([
+            StructField("node", node_type, True),
+            StructField("component", node_type, True)])
+        assert sorted(map(tuple, comp.collect())) == [
+            (a, a), (b, a), (c, a), (d, d), (e, d)]
+        assert "ExistingRDD" not in _executed_plan(comp)
+
+
 def test_salted_join_equivalence(spark):
     from recrun_spark.operators import salted_join
     big = spark.createDataFrame(
@@ -124,6 +163,50 @@ def test_resume_skips_completed_stages(spark, corpus_parquet, pipeline_out):
         os.remove(os.path.join(out, s, "_MANIFEST.json"))
     third = run_pipeline(spark, corpus_parquet, out)
     assert third["triples"] == first["triples"]
+
+
+def _triple_rows(spark, out):
+    return sorted(map(tuple, spark.read.parquet(
+        os.path.join(out, "stage4_triples"))
+        .select("subj", "pred", "obj", "doc_id").collect()))
+
+
+def test_resume_rebuilds_stages_of_another_dictionary(
+        spark, corpus_parquet, pipeline_out, tmp_path):
+    """A rerun into the same out_dir with a different alias dictionary
+    gives the triples of a fresh run with that dictionary: no stage built
+    from the old dictionary is reused.  A dictionary with the same surfaces
+    but one entity renamed reuses stage 1 (the fold and its mentions depend
+    on the surfaces only) and rebuilds stages 2-4."""
+    import shutil
+
+    from recrun_spark.fixtures.aliases import make_aliases
+    from recrun_spark.io.tableio import read_manifest
+    from recrun_spark.pipeline import run_pipeline
+    from recrun_spark.stage2 import load_aliases
+    out, _ = pipeline_out
+    before = _triple_rows(spark, out)
+    rows = make_aliases(42)
+    dropped = set(sorted({a for a, _e, _p in rows})[::2])
+    entity = next(s for s, p, _o, _d in before if p == "mentioned_in")
+    dictionaries = {
+        "surfaces": [r for r in rows if r[0] not in dropped],
+        "entity_id": [(a, e + "x" if e == entity else e, p)
+                      for a, e, p in rows],
+    }
+    for kind, other in dictionaries.items():
+        reused = str(tmp_path / kind / "reused")
+        fresh = str(tmp_path / kind / "fresh")
+        shutil.copytree(out, reused)
+        stage1 = read_manifest(os.path.join(reused, "stage1_extract"))
+        for path in (reused, fresh):
+            run_pipeline(spark, corpus_parquet, path,
+                         aliases_df=load_aliases(spark, other))
+        after = _triple_rows(spark, reused)
+        assert after == _triple_rows(spark, fresh), kind
+        assert after != before, kind
+        assert (read_manifest(os.path.join(reused, "stage1_extract"))
+                == stage1) == (kind == "entity_id"), kind
 
 
 def test_triples_partitioned_by_pred(pipeline_out):
